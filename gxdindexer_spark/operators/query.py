@@ -13,6 +13,14 @@ Lifecycle (SURVEY.md §3.4):
     -> global orderBy(score desc, doc_id asc).limit(k)   [gather —
        TakeOrdered over <= shards*k tiny rows]
 
+Plan shape: every serving method (top-k variants, match sets, sorted
+pages, export, explain, stored facets, grouping, highlighting, counts)
+is ONE ``IndexQueryEngine._scatter`` — one pruned postings scan, one
+``FlatMapGroupsInPandas`` worker per shard — plus its own JVM-side
+merge. The shard-local doc-store read (pyarrow, column-pruned,
+filter-pushed, masked to the shard's matches) lives in that primitive
+too, so stored columns never enter a Spark scan or exchange.
+
 The driver-side dictionary lookup is the analog of the reference's
 broadcast HashMap caches (GxdResultIndexer.java:91-272): the per-term
 stats are tiny (|query terms| rows) and close over the Arrow workers
@@ -27,9 +35,11 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from gxdindexer_spark.functions import analyze, bm25, hashing
 from gxdindexer_spark.functions import codec as codec_mod
@@ -307,8 +317,6 @@ class IndexQueryEngine:
         to pay one driver-blocking job per artifact), falling back to
         a Spark collect for filesystems pyarrow cannot open."""
         try:
-            import pyarrow.parquet as pq
-
             tbl = pq.read_table(path, columns=columns)
             return {c: tbl[c].to_pylist() for c in columns}
         except Exception:  # noqa: BLE001 — non-local fs
@@ -321,8 +329,6 @@ class IndexQueryEngine:
         (metadata read, no data pages); None when the layout is not
         plain ``*.parquet`` files."""
         import glob as glob_mod
-
-        import pyarrow.parquet as pq
 
         files = glob_mod.glob(os.path.join(path, "*.parquet"))
         if not files:
@@ -784,16 +790,7 @@ class IndexQueryEngine:
         filter-then-limit(k) after the global gather is rank-correct.
         -> DataFrame(doc_id, score), the k most similar docs."""
         field = field or next(iter(self.fields))
-        dps = int(self.manifest.get("docs_per_shard") or 1)
-        row = (
-            self.spark.read.parquet(f"{self.index_dir}/docs")
-            .filter(
-                (F.col("shard") == int(doc_id) // dps)
-                & (F.col("doc_id") == int(doc_id))
-            )
-            .select(field)
-            .collect()
-        )
+        row = self._docs_at([int(doc_id)]).select(field).collect()
         text = row[0][0] if row else None
         if not text:
             return _empty_df(self.spark, _HITS_SCHEMA)
@@ -944,11 +941,9 @@ class IndexQueryEngine:
         locks in). This is the GLOBAL form; ``topk(mode="auto")``
         applies the same dominance test inside each shard worker over
         the terms present in that shard — per-shard stats refine the
-        choice where term distributions are skewed across shards."""
-        ws = sorted(spec.term_weights.values(), reverse=True)
-        if len(ws) <= 1:
-            return "taat"
-        return "wand" if ws[0] > sum(ws[1:]) else "taat"
+        choice where term distributions are skewed across shards.
+        Both forms are ``wand.prefers_wand``."""
+        return "wand" if wand_mod.prefers_wand(spec) else "taat"
 
     def topk(
         self,
@@ -986,56 +981,37 @@ class IndexQueryEngine:
         built spec — the federation hook: FederatedQueryEngine builds
         ONE spec with globally merged stats and scatter-gathers each
         member index through this method."""
-        postings = self._postings_for(spec)
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        # boolean clauses need the full candidate doc sets -> exact
-        # TAAT; so does a spec whose corpus stats are not THIS index's
-        # (a federated merged-stats spec): the stored block-max bounds
-        # were computed under this index's own avgdl and don't cover
-        # scores under foreign stats
+        score = self._shard_scorer(spec, k, mode)
+
+        def shard_topk(pg: pd.DataFrame, sp) -> pd.DataFrame:
+            return wand_mod.hits_frame(*score(pg, sp))
+
+        local = self._scatter(spec, shard_topk, _HITS_SCHEMA)
+        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _shard_scorer(self, spec, k: int, mode: str):
+        """Worker-side local top-k ``(pg, spec) -> (ids, scores)`` for
+        ``mode``. Boolean clauses need the full candidate doc sets, and
+        a spec under foreign corpus stats (a federated merged-stats
+        spec) is not covered by this index's stored block-max bounds:
+        both run exact TAAT. "auto" decides per shard worker, by
+        ``wand.prefers_wand`` over the terms present in the shard's
+        postings — a shard missing the dominant rare term has nothing
+        to prune. All choices are rank-identical."""
         stats_native = set(spec.avgdl) == set(self.avgdl) and all(
             abs(spec.avgdl[f] - v) < 1e-12 for f, v in self.avgdl.items()
         )
-        prunable = self.blockmax_safe and not spec.is_boolean and stats_native
-        # "auto" defers the TAAT/WAND choice to EACH shard worker: the
-        # global plan (choose_mode) can only reason from corpus-wide
-        # idfs, but whether pruning pays is a per-shard question — a
-        # shard missing the dominant rare term has nothing to prune
-        # and should run straight TAAT. The worker applies the same
-        # dominance heuristic restricted to the terms actually present
-        # in its postings group (zero extra storage or I/O: the
-        # group's term set is already in hand). All choices are
-        # rank-identical, so this is purely a latency decision.
-        shard_auto = mode == "auto" and prunable
-        use_wand = mode == "wand" and prunable
+        if not (self.blockmax_safe and not spec.is_boolean and stats_native):
+            mode = "taat"
 
-        def shard_topk(pg: pd.DataFrame) -> pd.DataFrame:
-            if not len(pg):
-                return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                    {"doc_id": "int64", "score": "float64"}
-                )
-            sp = b_spec.value
-            if shard_auto:
-                present = set(
-                    pg[["field", "term_id"]]
-                    .drop_duplicates()
-                    .itertuples(index=False, name=None)
-                )
-                ws = sorted(
-                    (w for kk, w in sp.term_weights.items() if kk in present),
-                    reverse=True,
-                )
-                use = bool(ws) and ws[0] > sum(ws[1:])
-            else:
-                use = use_wand
-            fn = wand_mod.wand if use else wand_mod.taat
-            ids, scores = fn(pg, sp, k)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
+        def score(pg: pd.DataFrame, sp) -> tuple[np.ndarray, np.ndarray]:
+            use = mode == "wand" or (
+                mode == "auto"
+                and wand_mod.prefers_wand(sp, wand_mod.present_terms(pg))
+            )
+            return (wand_mod.wand if use else wand_mod.taat)(pg, sp, k)
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_topk, schema=_HITS_SCHEMA
-        )
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return score
 
     def _topk_filtered(self, spec, k: int, where) -> DataFrame:
         """Filtered-retrieval worker plan (see ``topk(where=)``).
@@ -1043,44 +1019,15 @@ class IndexQueryEngine:
         ready list of pyarrow filter tuples (the join qparser passes
         its computed IN-set directly)."""
         flt = _parse_where(where) if isinstance(where, str) else where
-        store_cols = {f.name for f in self._doc_store_schema().fields}
-        for col, _op, _v in flt:
-            if col not in store_cols:
-                raise ValueError(
-                    f"where column {col!r} is not in the doc store "
-                    f"(has: {sorted(store_cols)})"
-                )
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
 
-        def shard_topk_filtered(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
+        def shard_topk_filtered(hit: pd.DataFrame, scores) -> pd.DataFrame:
+            ids = hit["doc_id"].to_numpy()
+            return wand_mod.hits_frame(
+                *wand_mod._topk_from_scores(ids, scores, k)
             )
-            ids, scores = wand_mod.match_scores(pg, b_spec.value)
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            # parquet filters -> row-group stats pruning; only the
-            # doc_id column of surviving rows materializes
-            allowed = (
-                pq.read_table(
-                    f"{idx_dir}/docs/shard={shard}",
-                    columns=["doc_id"],
-                    filters=flt,
-                )["doc_id"].to_numpy()
-            )
-            keep = np.isin(ids, allowed)
-            ids, scores = ids[keep], scores[keep]
-            if not ids.size:
-                return empty
-            ids, scores = wand_mod._topk_from_scores(ids, scores, k)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_topk_filtered, schema=_HITS_SCHEMA
+        local = self._scatter(
+            spec, shard_topk_filtered, _HITS_SCHEMA, store_cols=(), filters=flt
         )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1132,53 +1079,39 @@ class IndexQueryEngine:
             )
         if combine not in ("add", "mul"):
             raise ValueError("combine must be 'add' or 'mul'")
+        self._doc_store_types([field])
         spec = self.make_spec(query, fields)
-        store_cols = {f.name for f in self._doc_store_schema().fields}
-        if field not in store_cols:
-            raise ValueError(
-                f"boost field {field!r} is not in the doc store "
-                f"(has: {sorted(store_cols)})"
-            )
         if not spec.term_weights:
             return _empty_df(self.spark, _HITS_SCHEMA)
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
         boost_fn = self._BOOST_FNS[fn]
 
-        def shard_topk_boosted(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            ids, scores = wand_mod.match_scores(pg, b_spec.value)
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", field]
-            ).to_pandas().set_index("doc_id")
-            v = store[field].reindex(ids).to_numpy("float64")
+        def shard_topk_boosted(hit: pd.DataFrame, scores) -> pd.DataFrame:
             with np.errstate(invalid="ignore"):
-                b = weight * boost_fn(v)
+                b = weight * boost_fn(hit[field].to_numpy("float64"))
             if combine == "add":
                 scores = scores + np.where(np.isnan(b), 0.0, b)
             else:
                 scores = scores * np.where(np.isnan(b), 1.0, b)
-            ids, scores = wand_mod._topk_from_scores(ids, scores, k)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
+            ids = hit["doc_id"].to_numpy()
+            return wand_mod.hits_frame(
+                *wand_mod._topk_from_scores(ids, scores, k)
+            )
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_topk_boosted, schema=_HITS_SCHEMA
+        local = self._scatter(
+            spec, shard_topk_boosted, _HITS_SCHEMA, store_cols=(field,)
         )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _postings_for(self, spec):
-        """Pruned postings scan covering scoring + boolean clause terms."""
-        keys = (
-            set(spec.term_weights)
-            | {m for g in spec.must_groups for m in g}
-            | set(spec.must_not)
+    def _postings_for(self, *specs):
+        """Pruned postings scan covering the scoring + boolean clause
+        terms of ``specs`` (their union: a batch shares one scan)."""
+        keys = set().union(
+            *(
+                set(s.term_weights)
+                | {m for g in s.must_groups for m in g}
+                | set(s.must_not)
+                for s in specs
+            )
         )
         tids = sorted({t for _f, t in keys})
         flds = sorted({f for f, _t in keys})
@@ -1217,14 +1150,15 @@ class IndexQueryEngine:
         avgdl = self.avgdl[field]
         k1, b = float(self.manifest["k1"]), float(self.manifest["b"])
 
-        def shard_phrase(pg: pd.DataFrame) -> pd.DataFrame:
-            ids, scores = wand_mod.phrase_topk_shard(
-                pg, tids, field, idf_sum, avgdl, k, k1, b, slop=slop
+        def shard_phrase(pg: pd.DataFrame, _sp) -> pd.DataFrame:
+            return wand_mod.hits_frame(
+                *wand_mod.phrase_topk_shard(
+                    pg, tids, field, idf_sum, avgdl, k, k1, b, slop=slop
+                )
             )
-            return pd.DataFrame({"doc_id": ids, "score": scores})
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_phrase, schema=_HITS_SCHEMA
+        local = self._scatter(
+            None, shard_phrase, _HITS_SCHEMA, postings=postings
         )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1247,8 +1181,6 @@ class IndexQueryEngine:
         scoring passes — the reference's batched Solr query loop
         (GxdResultIndexer.java:900-1268 chunk loop) turned sideways.
         """
-        from pyspark.sql.window import Window
-
         specs = {
             qid: self.make_spec(q, fields) for qid, q in queries.items()
         }
@@ -1262,67 +1194,27 @@ class IndexQueryEngine:
         )
         if not specs:
             return _empty_df(self.spark, out_schema)
-        keys = set()
-        for s in specs.values():
-            keys |= (
-                set(s.term_weights)
-                | {m for g in s.must_groups for m in g}
-                | set(s.must_not)
-            )
-        tids = sorted({t for _f, t in keys})
-        flds = sorted({f for f, _t in keys})
-        postings = self._postings.filter(
-            F.col("term_id").isin(tids) & F.col("field").isin(flds)
-        )
-        b_specs = self.spark.sparkContext.broadcast(specs)
         safe = self.blockmax_safe
 
-        def shard_topk(pg: pd.DataFrame) -> pd.DataFrame:
-            present = None
-            if mode == "auto" and len(pg):
-                # per-shard, per-QUERY adaptive choice (same dominance
-                # test as topk(mode="auto")): one drop_duplicates over
-                # in-hand postings shared by every query in the batch
-                present = set(
-                    pg[["field", "term_id"]]
-                    .drop_duplicates()
-                    .itertuples(index=False, name=None)
-                )
+        def shard_topk(pg: pd.DataFrame, specs) -> pd.DataFrame | None:
+            # per-shard, per-QUERY "auto" choice: one present-term set
+            # shared by every query in the batch
+            present = wand_mod.present_terms(pg) if mode == "auto" else None
             frames = []
-            for qid, sp in b_specs.value.items():
-                if mode == "auto":
-                    ws = sorted(
-                        (
-                            w
-                            for kk, w in sp.term_weights.items()
-                            if kk in (present or ())
-                        ),
-                        reverse=True,
-                    )
-                    use_wand = (
-                        safe
-                        and not sp.is_boolean
-                        and bool(ws)
-                        and ws[0] > sum(ws[1:])
-                    )
-                else:
-                    use_wand = mode == "wand" and safe and not sp.is_boolean
+            for qid, sp in specs.items():
+                use_wand = safe and not sp.is_boolean and (
+                    mode == "wand"
+                    or (mode == "auto" and wand_mod.prefers_wand(sp, present))
+                )
                 fn = wand_mod.wand if use_wand else wand_mod.taat
                 ids, scores = fn(pg, sp, k)
-                if ids.size:
-                    frames.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "doc_id": ids, "score": scores}
-                        )
-                    )
-            if not frames:
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "score": []}
-                ).astype({"doc_id": "int64", "score": "float64"})
+                hits = wand_mod.hits_frame(ids, scores)
+                frames.append(hits.assign(query_id=qid))
             return pd.concat(frames, ignore_index=True)
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_topk, schema=out_schema
+        local = self._scatter(
+            specs, shard_topk, out_schema,
+            postings=self._postings_for(*specs.values()),
         )
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -1350,24 +1242,10 @@ class IndexQueryEngine:
         -> (doc_id, score, *columns), score-desc order preserved.
         """
         hits = self.topk(query, k, fields, mode).collect()
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("score", T.DoubleType(), False),
-            ]
-        )
         if not hits:
-            return _empty_df(self.spark, out_schema)
-        dps = int(self.manifest.get("docs_per_shard") or 1)
+            return _empty_df(self.spark, _HITS_SCHEMA)
         ids = [int(r["doc_id"]) for r in hits]
-        shards = sorted({i // dps for i in ids})
-        store = (
-            self.spark.read.parquet(f"{self.index_dir}/docs")
-            .filter(
-                F.col("shard").isin(shards) & F.col("doc_id").isin(ids)
-            )
-            .select("doc_id", *columns)
-        )
+        store = self._docs_at(ids).select("doc_id", *columns)
         # pandas local relation (Arrow): a python-LIST createDataFrame
         # becomes a 32-partition python RDD and any action on it spawns
         # a Python worker per partition — seconds of overhead for k rows
@@ -1376,7 +1254,7 @@ class IndexQueryEngine:
                 [(int(r["doc_id"]), float(r["score"])) for r in hits],
                 columns=["doc_id", "score"],
             ),
-            out_schema,
+            _HITS_SCHEMA,
         )
         return hits_df.join(F.broadcast(store), "doc_id").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -1395,15 +1273,11 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
 
-        def shard_docs(pg: pd.DataFrame) -> pd.DataFrame:
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            return pd.DataFrame({"doc_id": ids})
+        def shard_docs(pg: pd.DataFrame, sp) -> pd.DataFrame:
+            return pd.DataFrame({"doc_id": wand_mod.match_docs(pg, sp)})
 
-        return self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_docs, schema=out_schema
-        )
+        return self._scatter(spec, shard_docs, out_schema)
 
     def sorted_matches(
         self,
@@ -1459,65 +1333,23 @@ class IndexQueryEngine:
             )
         flt = _parse_where(where) if where is not None else None
         spec = self.make_spec(query, fields)
-        store_schema = {
-            f.name: f.dataType for f in self._doc_store_schema().fields
-        }
-        for c in (by, *columns):
-            if c not in store_schema:
-                raise ValueError(
-                    f"column {c!r} is not in the doc store "
-                    f"(has: {sorted(store_schema)})"
-                )
-        for col, _op, _v in flt or ():
-            if col not in store_schema:
-                raise ValueError(
-                    f"where column {col!r} is not in the doc store "
-                    f"(has: {sorted(store_schema)})"
-                )
-        out_schema = T.StructType(
-            [T.StructField("doc_id", T.LongType(), False)]
-            + [T.StructField(c, store_schema[c], True) for c in (by, *columns)]
-        )
+        out_schema = self._hydrated_schema(by, columns, flt)
+        cols = out_schema.fieldNames()
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
         n_local = offset + k
-        cols = ["doc_id", by, *[c for c in columns if c != by]]
 
-        def shard_sorted(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            empty = pd.DataFrame({c: [] for c in cols}).astype(
-                {"doc_id": "int64"}
-            )
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=cols, filters=flt
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
-            if after is not None and len(hit):
+        def shard_sorted(hit: pd.DataFrame, _scores) -> pd.DataFrame:
+            if after is not None:
                 av, ad = after
-                if ascending:
-                    keep = (hit[by] > av) | (
-                        (hit[by] == av) & (hit["doc_id"] > ad)
-                    )
-                else:
-                    keep = (hit[by] < av) | (
-                        (hit[by] == av) & (hit["doc_id"] > ad)
-                    )
-                hit = hit[keep]
-            if not len(hit):
-                return empty
+                beyond = hit[by] > av if ascending else hit[by] < av
+                hit = hit[beyond | ((hit[by] == av) & (hit["doc_id"] > ad))]
             return hit.sort_values(
                 [by, "doc_id"], ascending=[ascending, True], kind="mergesort"
-            ).head(n_local)[cols]
+            ).head(n_local)
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_sorted, schema=out_schema
+        local = self._scatter(
+            spec, shard_sorted, out_schema, store_cols=cols, filters=flt
         )
         order = F.asc(by) if ascending else F.desc(by)
         out = local.orderBy(order, F.asc("doc_id"))
@@ -1557,42 +1389,16 @@ class IndexQueryEngine:
         doc_id asc), ALL matching rows."""
         flt = _parse_where(where) if where is not None else None
         spec = self.make_spec(query, fields)
-        store_schema = {
-            f.name: f.dataType for f in self._doc_store_schema().fields
-        }
-        for c in (by, *columns, *[c for c, _o, _v in flt or ()]):
-            if c not in store_schema:
-                raise ValueError(
-                    f"column {c!r} is not in the doc store "
-                    f"(has: {sorted(store_schema)})"
-                )
-        out_schema = T.StructType(
-            [T.StructField("doc_id", T.LongType(), False)]
-            + [T.StructField(c, store_schema[c], True) for c in (by, *columns)]
-        )
+        out_schema = self._hydrated_schema(by, columns, flt)
+        cols = out_schema.fieldNames()
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
-        cols = ["doc_id", by, *[c for c in columns if c != by]]
 
-        def shard_export(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
+        def shard_export(hit: pd.DataFrame, _scores) -> pd.DataFrame:
+            return hit
 
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            empty = pd.DataFrame({c: [] for c in cols}).astype(
-                {"doc_id": "int64"}
-            )
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=cols, filters=flt
-            ).to_pandas()
-            return store[np.isin(store["doc_id"].to_numpy(), ids)][cols]
-
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_export, schema=out_schema
+        local = self._scatter(
+            spec, shard_export, out_schema, store_cols=cols, filters=flt
         )
         order = F.asc(by) if ascending else F.desc(by)
         return local.orderBy(order, F.asc("doc_id"))
@@ -1604,6 +1410,97 @@ class IndexQueryEngine:
                 f"{self.index_dir}/docs"
             ).schema
         return self._docs_schema
+
+    def _docs_at(self, ids: list[int]) -> DataFrame:
+        """Doc-store rows of ``ids`` — the serving point lookup:
+        partition-pruned to their shard dirs (shard = doc_id //
+        docs_per_shard) plus a pushed doc_id IN-list."""
+        dps = int(self.manifest.get("docs_per_shard") or 1)
+        return self.spark.read.parquet(f"{self.index_dir}/docs").filter(
+            F.col("shard").isin(sorted({i // dps for i in ids}))
+            & F.col("doc_id").isin(ids)
+        )
+
+    def _doc_store_types(self, cols) -> dict[str, T.DataType]:
+        """The one doc-store column check: the stored Spark type of
+        each of ``cols``; raises on a column the doc store lacks."""
+        have = {f.name: f.dataType for f in self._doc_store_schema().fields}
+        for c in cols:
+            if c not in have:
+                raise ValueError(
+                    f"column {c!r} is not in the doc store "
+                    f"(has: {sorted(have)})"
+                )
+        return {c: have[c] for c in cols}
+
+    def _hydrated_schema(self, by: str, columns, flt) -> T.StructType:
+        """Schema of (doc_id, <by>, *columns) rows, each column once.
+        Checks them and the ``where`` columns up front, so a bad column
+        raises even when the query matches nothing."""
+        cols = list(dict.fromkeys(["doc_id", by, *columns]))
+        types = self._doc_store_types([*cols, *(c for c, _o, _v in flt or ())])
+        return T.StructType(
+            [T.StructField(c, types[c], c != "doc_id") for c in cols]
+        )
+
+    def _scatter(
+        self,
+        spec,
+        shard_fn,
+        schema: T.StructType,
+        *,
+        postings: DataFrame | None = None,
+        store_cols: tuple | list | None = None,
+        filters: list[tuple] | None = None,
+    ) -> DataFrame:
+        """The one shard scatter: ``postings`` (default: the pruned scan
+        ``_postings_for(spec)``) grouped by shard, ONE ``applyInPandas``
+        worker per shard emitting rows of ``schema``; callers add their
+        own JVM-side merge. ``spec`` (a QuerySpec, a {query_id: spec}
+        batch, or None) is broadcast once.
+
+        Without ``store_cols`` the worker returns ``shard_fn(pg, spec)``
+        for the shard's postings rows. With them, it scores the shard's
+        match set (``wand.match_scores``), reads doc_id + ``store_cols``
+        of the shard's OWN doc-store partition with pyarrow (column-
+        pruned, ``filters`` pushed as parquet row-group filters), keeps
+        the matched rows and returns ``shard_fn(hit, scores)``, scores
+        aligned to ``hit``. A None or empty return becomes the empty
+        frame of ``schema``. The worker carries ``shard_fn``'s name,
+        which the plan's ``FlatMapGroupsInPandas`` node shows."""
+        cols = None
+        if store_cols is not None:
+            cols = list(dict.fromkeys(["doc_id", *store_cols]))
+            self._doc_store_types([*cols, *(c for c, _o, _v in filters or ())])
+        if postings is None:
+            postings = self._postings_for(spec)
+        sc = self.spark.sparkContext
+        b_spec = None if spec is None else sc.broadcast(spec)
+        docs_dir = f"{self.index_dir}/docs"
+
+        def worker(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
+            sp = None if b_spec is None else b_spec.value
+            if cols is None:
+                out = shard_fn(pg, sp)
+            else:
+                out = None
+                ids, scores = wand_mod.match_scores(pg, sp)  # ids ascending
+                if ids.size:
+                    store = pq.read_table(
+                        f"{docs_dir}/shard={int(key[0])}",
+                        columns=cols,
+                        filters=filters,
+                    ).to_pandas()
+                    d = store["doc_id"].to_numpy()
+                    at = np.searchsorted(ids, d).clip(max=ids.size - 1)
+                    hit = ids[at] == d
+                    out = shard_fn(store[hit], scores[at[hit]])
+            if out is None or not len(out):
+                return to_arrow_schema(schema).empty_table().to_pandas()
+            return out
+
+        worker.__name__ = worker.__qualname__ = shard_fn.__name__
+        return postings.groupBy("shard").applyInPandas(worker, schema=schema)
 
     def get_docs(
         self,
@@ -1621,13 +1518,7 @@ class IndexQueryEngine:
         result (Solr returns null docs; a DataFrame has no nulls to
         return). -> (doc_id, *stored columns), doc_id ascending."""
         ids = sorted({int(i) for i in doc_ids})
-        schema = {f.name for f in self._doc_store_schema().fields}
-        for c in columns:
-            if c not in schema:
-                raise ValueError(
-                    f"column {c!r} is not in the doc store "
-                    f"(has: {sorted(schema)})"
-                )
+        self._doc_store_types(columns)
         out = self.spark.read.parquet(f"{self.index_dir}/docs")
         if not ids:
             out = out.filter(F.lit(False))
@@ -1674,15 +1565,8 @@ class IndexQueryEngine:
         ``export_matches`` + a Spark join instead.
 
         -> (doc_id, score) global top-k of the restricted set."""
-        store_types = {
-            f.name: f.dataType for f in self._doc_store_schema().fields
-        }
+        store_types = self._doc_store_types((join_from, join_to))
         for c in (join_from, join_to):
-            if c not in store_types:
-                raise ValueError(
-                    f"join column {c!r} is not in the doc store "
-                    f"(has: {sorted(store_types)})"
-                )
             if not isinstance(store_types[c], T.StringType):
                 # the facet path (and Solr's own join) keys on strings
                 raise ValueError(
@@ -1745,18 +1629,12 @@ class IndexQueryEngine:
         postings = self._postings_for(spec)
         if dps:
             postings = postings.filter(F.col("shard") == did // dps)
-        b_spec = self.spark.sparkContext.broadcast(spec)
 
-        def shard_explain(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            sp = b_spec.value
-            names = [f.name for f in out_schema.fields]
-            empty = pd.DataFrame({c: [] for c in names}).astype(
-                {"df": "int64"}
-            )
+        def shard_explain(pg: pd.DataFrame, sp) -> pd.DataFrame | None:
             # boolean membership first: an excluded doc explains empty
             ids, _scores = wand_mod.match_scores(pg, sp)
             if did not in ids:
-                return empty
+                return None
             recs = []
             for r in pg.itertuples():
                 k = (r.field, int(r.term_id))
@@ -1791,12 +1669,10 @@ class IndexQueryEngine:
                         contrib,
                     )
                 )
-            if not recs:
-                return empty
-            return pd.DataFrame(recs, columns=names)
+            return pd.DataFrame(recs, columns=out_schema.fieldNames())
 
-        local = postings.groupBy("shard").applyInPandas(
-            shard_explain, schema=out_schema
+        local = self._scatter(
+            spec, shard_explain, out_schema, postings=postings
         )
         return local.orderBy(F.desc("contribution"), F.asc("term"))
 
@@ -1932,79 +1808,21 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
 
-        def shard_facets(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            empty = pd.DataFrame({by: [], "n_docs": []}).astype(
-                {by: "object", "n_docs": "int64"}
-            )
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            tbl = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", by]
-            )
-            store = tbl.to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
-            if not len(hit):
-                return empty
+        def shard_facets(hit: pd.DataFrame, _scores) -> pd.DataFrame:
             vc = hit[by].astype(str).value_counts()
-            return pd.DataFrame(
-                {by: vc.index.to_numpy(), "n_docs": vc.to_numpy("int64")}
-            )
+            return vc.reset_index(name="n_docs")
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_facets, schema=out_schema
-        )
+        local = self._scatter(spec, shard_facets, out_schema, store_cols=(by,))
         return local.groupBy(by).agg(F.sum("n_docs").alias("n_docs"))
 
-    def _shard_group_heads(self, spec, by, k_groups, k_per_group, within):
-        """Per-shard worker factory for grouped retrieval: score every
-        match (wand.match_scores), attach the group value from a
-        column-pruned pyarrow read of the shard's OWN doc-store
-        partition, keep each group's local top-``k_per_group`` docs,
-        then only the local top-``k_groups`` groups by head score.
-        ``within`` (optional frozenset) restricts to already-selected
-        groups (pass 2). Emits <= k_groups x k_per_group tiny rows."""
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
-
-        def shard_groups(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame(
-                {by: [], "doc_id": [], "score": []}
-            ).astype({by: "object", "doc_id": "int64", "score": "float64"})
-            ids, scores = wand_mod.match_scores(pg, b_spec.value)
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", by]
-            ).to_pandas().set_index("doc_id")
-            grp = store[by].reindex(ids).to_numpy()
-            hit = pd.DataFrame({by: grp, "doc_id": ids, "score": scores})
-            hit = hit[hit[by].notna()]  # Solr-style: ungrouped docs drop
-            if within is not None:
-                hit = hit[hit[by].isin(within)]
-            if not len(hit):
-                return empty
-            hit = hit.sort_values(
-                ["score", "doc_id"], ascending=[False, True],
-                kind="mergesort",
-            )
-            hit = hit.groupby(by, sort=False).head(k_per_group)
-            # head score of each group = its first row post-sort
-            heads = hit.drop_duplicates(by).head(k_groups)
-            return hit[hit[by].isin(heads[by])][[by, "doc_id", "score"]]
-
-        return shard_groups
-
     def _grouped_gather(self, spec, by, k_groups, k_per_group, within):
+        """Per-shard group heads for grouped retrieval: attach each
+        match's group value from the shard's doc store, keep each
+        group's local top-``k_per_group`` docs, then only the local
+        top-``k_groups`` groups by head score. ``within`` (optional
+        frozenset) restricts to already-selected groups (pass 2).
+        Emits <= k_groups x k_per_group tiny rows per shard."""
         schema = T.StructType(
             [
                 T.StructField(by, T.StringType(), True),
@@ -2012,10 +1830,22 @@ class IndexQueryEngine:
                 T.StructField("score", T.DoubleType(), False),
             ]
         )
-        fn = self._shard_group_heads(spec, by, k_groups, k_per_group, within)
-        return self._postings_for(spec).groupBy("shard").applyInPandas(
-            fn, schema=schema
-        )
+
+        def shard_groups(hit: pd.DataFrame, scores) -> pd.DataFrame:
+            hit = hit[[by, "doc_id"]].assign(score=scores)
+            hit = hit[hit[by].notna()]  # Solr-style: ungrouped docs drop
+            if within is not None:
+                hit = hit[hit[by].isin(within)]
+            hit = hit.sort_values(
+                ["score", "doc_id"], ascending=[False, True],
+                kind="mergesort",
+            )
+            hit = hit.groupby(by, sort=False).head(k_per_group)
+            # head score of each group = its first row post-sort
+            heads = hit.drop_duplicates(by).head(k_groups)
+            return hit[hit[by].isin(heads[by])]
+
+        return self._scatter(spec, shard_groups, schema, store_cols=(by,))
 
     def grouped_topk(
         self,
@@ -2163,39 +1993,15 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
 
-        def shard_ranges(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame(
-                {"bucket_start": [], "n_docs": []}
-            ).astype({"bucket_start": "int64", "n_docs": "int64"})
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", by]
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
+        def shard_ranges(hit: pd.DataFrame, _scores) -> pd.DataFrame:
             vals = hit[by].dropna().to_numpy()
             vals = vals[(vals >= start) & (vals < end)]
-            if not vals.size:
-                return empty
             buckets = start + ((vals - start) // gap).astype("int64") * gap
-            vc = pd.Series(buckets).value_counts()
-            return pd.DataFrame(
-                {
-                    "bucket_start": vc.index.to_numpy("int64"),
-                    "n_docs": vc.to_numpy("int64"),
-                }
-            )
+            vc = pd.Series(buckets, dtype="int64").value_counts()
+            return vc.rename_axis("bucket_start").reset_index(name="n_docs")
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_ranges, schema=out_schema
-        )
+        local = self._scatter(spec, shard_ranges, out_schema, store_cols=(by,))
         return local.groupBy("bucket_start").agg(
             F.sum("n_docs").alias("n_docs")
         )
@@ -2223,38 +2029,18 @@ class IndexQueryEngine:
         )
         if not spec.term_weights:
             return _empty_df(self.spark, out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
 
-        def shard_pivot(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame(
-                {by_a: [], by_b: [], "n_docs": []}
-            ).astype({by_a: "object", by_b: "object", "n_docs": "int64"})
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}",
-                columns=["doc_id", by_a, by_b],
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
-            hit = hit.dropna(subset=[by_a, by_b])
-            if not len(hit):
-                return empty
+        def shard_pivot(hit: pd.DataFrame, _scores) -> pd.DataFrame:
             vc = (
-                hit.groupby([by_a, by_b], sort=False)
+                hit.dropna(subset=[by_a, by_b])
+                .groupby([by_a, by_b], sort=False)
                 .size()
                 .reset_index(name="n_docs")
             )
-            vc[by_a] = vc[by_a].astype(str)
-            vc[by_b] = vc[by_b].astype(str)
-            return vc
+            return vc.astype({by_a: str, by_b: str})
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_pivot, schema=out_schema
+        local = self._scatter(
+            spec, shard_pivot, out_schema, store_cols=(by_a, by_b)
         )
         return local.groupBy(by_a, by_b).agg(
             F.sum("n_docs").alias("n_docs")
@@ -2319,29 +2105,12 @@ class IndexQueryEngine:
                 T.StructField("vmax", T.DoubleType(), True),
             ]
         )
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
 
-        def shard_stats(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            names = [f.name for f in part_schema.fields]
-            empty = pd.DataFrame({c: [] for c in names}).astype(
-                {"n": "int64", "missing": "int64"}
-            )
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}",
-                columns=["doc_id", on, *gcols],
-            ).to_pandas()
-            hit = store[np.isin(store["doc_id"].to_numpy(), ids)]
+        def shard_stats(hit: pd.DataFrame, _scores) -> pd.DataFrame | None:
             if by:
                 hit = hit[hit[by].notna()]
             if not len(hit):
-                return empty
+                return None
 
             def partial(g: pd.DataFrame) -> pd.Series:
                 v = g[on].dropna().astype("float64")
@@ -2365,22 +2134,12 @@ class IndexQueryEngine:
                 )
             else:
                 out = partial(hit).to_frame().T
-            out = out.astype(
-                {
-                    "n": "int64",
-                    "missing": "int64",
-                    "vsum": "float64",
-                    "vsumsq": "float64",
-                    "vmin": "float64",
-                    "vmax": "float64",
-                }
-            )
             # NaN float cells cross Arrow as nulls, which the JVM-side
             # min/sum aggs then ignore — exactly the merge we want
-            return out[names]
+            return out.astype({"n": "int64", "missing": "int64"})
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_stats, schema=part_schema
+        local = self._scatter(
+            spec, shard_stats, part_schema, store_cols=(on, *gcols)
         )
         merged = local.groupBy(*gcols).agg(
             F.sum("n").alias("n_docs"),
@@ -2447,37 +2206,13 @@ class IndexQueryEngine:
                 T.StructField("c", T.LongType(), False),
             ]
         )
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        idx_dir = self.index_dir
 
-        def shard_hist(key: tuple, pg: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            empty = pd.DataFrame({"v": [], "c": []}).astype(
-                {"v": "float64", "c": "int64"}
-            )
-            ids = wand_mod.match_docs(pg, b_spec.value)
-            if not ids.size:
-                return empty
-            shard = int(key[0])
-            store = pq.read_table(
-                f"{idx_dir}/docs/shard={shard}", columns=["doc_id", on]
-            ).to_pandas()
-            vals = store[np.isin(store["doc_id"].to_numpy(), ids)][
-                on
-            ].dropna()
-            if not len(vals):
-                return empty
-            vc = vals.astype("float64").value_counts()
-            return pd.DataFrame(
-                {"v": vc.index.to_numpy("float64"),
-                 "c": vc.to_numpy("int64")}
-            )
+        def shard_hist(hit: pd.DataFrame, _scores) -> pd.DataFrame:
+            vc = hit[on].dropna().astype("float64").value_counts()
+            return vc.rename_axis("v").reset_index(name="c")
 
         hist = (
-            self._postings_for(spec)
-            .groupBy("shard")
-            .applyInPandas(shard_hist, schema=part_schema)
+            self._scatter(spec, shard_hist, part_schema, store_cols=(on,))
             .groupBy("v")
             .agg(F.sum("c").alias("c"))
         )
@@ -2523,24 +2258,25 @@ class IndexQueryEngine:
 
         ONE scatter-gather (r5: previously top-k collected first, then
         a second postings pass computed windows — two sequential jobs):
-        each shard worker scores its LOCAL top-k (rank-identical to
-        ``topk``) and computes the windows for those k candidates in
-        the same pass — the positional postings are already in hand,
-        and speculative windows for shards x k candidates cost
-        microseconds next to the scan they piggyback on; the global
-        orderBy/limit then keeps the true top-k. A hit none of whose
-        ANALYZED query tokens occurs literally (possible only for
-        pure wildcard/fuzzy rewrites whose base token is not itself a
-        dictionary term) has no span and is omitted BEFORE the global
-        limit — for such non-literal rewrites a lower-ranked
-        with-span doc can therefore fill the freed slot, so the
-        result is ``topk``'s ranking over the docs that HAVE a
-        literal-token span, not always a subset of ``topk(k)``
+        each shard worker scores its LOCAL top-k over ``field`` ALONE
+        (the ranking of ``topk(query, fields=[field], mode=mode)``, not
+        of the all-fields ``topk(query)``) and computes the windows for
+        those k candidates in the same pass — the positional postings
+        are already in hand, and speculative windows for shards x k
+        candidates cost microseconds next to the scan they piggyback
+        on; the global orderBy/limit then keeps the true top-k. A hit
+        none of whose ANALYZED query tokens occurs literally (possible
+        only for pure wildcard/fuzzy rewrites whose base token is not
+        itself a dictionary term) has no span and is omitted BEFORE the
+        global limit — for such non-literal rewrites a lower-ranked
+        with-span doc can therefore fill the freed slot, so the result
+        is that ranking over the docs that HAVE a literal-token span,
+        not always a subset of ``topk(query, k, fields=[field])``
         (ADVICE r5). For queries whose tokens are literal dictionary
-        terms (every term scores via its own postings), ranking is
-        exactly ``topk``'s. ``render=True`` additionally
-        attaches the window's actual text slice (``snippet`` column)
-        via a pruned doc-store point lookup — see
+        terms (every term scores via its own postings), the ranking is
+        exactly ``topk(query, k, fields=[field])``'s. ``render=True``
+        additionally attaches the window's actual text slice
+        (``snippet`` column) via a pruned doc-store point lookup — see
         ``_render_snippets``."""
         if not self.manifest.get("with_positions"):
             raise ValueError(
@@ -2561,55 +2297,19 @@ class IndexQueryEngine:
             return _empty_df(self.spark, out_schema)
         terms = analyze.tokenize_query(query, self.fields[field])
         tids = [self._tid(t) for t in terms]
-        b_spec = self.spark.sparkContext.broadcast(spec)
-        prunable = self.blockmax_safe and not spec.is_boolean
-        shard_auto = mode == "auto" and prunable
-        use_wand = mode == "wand" and prunable
-        empty_cast = {
-            "doc_id": "int64",
-            "score": "float64",
-            "start_pos": "int32",
-            "end_pos": "int32",
-            "n_hits": "int32",
-        }
+        score = self._shard_scorer(spec, k, mode)
 
-        def shard_hl(pg: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {c: [] for c in empty_cast}
-            ).astype(empty_cast)
-            if not len(pg):
-                return empty
-            sp = b_spec.value
-            if shard_auto:
-                present = set(
-                    pg[["field", "term_id"]]
-                    .drop_duplicates()
-                    .itertuples(index=False, name=None)
-                )
-                ws = sorted(
-                    (w for kk, w in sp.term_weights.items() if kk in present),
-                    reverse=True,
-                )
-                use = bool(ws) and ws[0] > sum(ws[1:])
-            else:
-                use = use_wand
-            fn = wand_mod.wand if use else wand_mod.taat
-            ids, scores = fn(pg, sp, k)
+        def shard_hl(pg: pd.DataFrame, sp) -> pd.DataFrame | None:
+            ids, scores = score(pg, sp)
             if not ids.size:
-                return empty
-            rows = wand_mod.best_window_shard(pg, tids, field, ids, window)
-            if not rows:
-                return empty
-            sc = dict(zip(ids.tolist(), scores.tolist()))
+                return None
             df = pd.DataFrame(
-                rows, columns=["doc_id", "start_pos", "end_pos", "n_hits"]
+                wand_mod.best_window_shard(pg, tids, field, ids, window),
+                columns=["doc_id", "start_pos", "end_pos", "n_hits"],
             )
-            df["score"] = df["doc_id"].map(sc)
-            return df[list(empty_cast)].astype(empty_cast)
+            return df.assign(score=df["doc_id"].map(dict(zip(ids, scores))))
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_hl, schema=out_schema
-        )
+        local = self._scatter(spec, shard_hl, out_schema)
         out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         if not render:
             return out
@@ -2632,17 +2332,10 @@ class IndexQueryEngine:
         if not rows:
             return _empty_df(self.spark, out_schema)
         tokenizer = self.fields[field]
-        dps = int(self.manifest.get("docs_per_shard") or 1)
         ids = [int(r["doc_id"]) for r in rows]
-        shards = sorted({i // dps for i in ids})
         texts = {
             int(r["doc_id"]): r[field] or ""
-            for r in self.spark.read.parquet(f"{self.index_dir}/docs")
-            .filter(
-                F.col("shard").isin(shards) & F.col("doc_id").isin(ids)
-            )
-            .select("doc_id", field)
-            .collect()
+            for r in self._docs_at(ids).select("doc_id", field).collect()
         }
         recs = []
         for r in rows:
@@ -2674,16 +2367,16 @@ class IndexQueryEngine:
             [T.StructField("n_matches", T.LongType(), False)]
         )
         if not spec.term_weights:
-            return self.spark.createDataFrame([(0,)], out_schema)
-        b_spec = self.spark.sparkContext.broadcast(spec)
+            # the zero row built JVM-side, as in _empty_df
+            return self.spark.range(1).select(
+                F.lit(0).cast(T.LongType()).alias("n_matches")
+            )
 
-        def shard_count(pg: pd.DataFrame) -> pd.DataFrame:
-            ids = wand_mod.match_docs(pg, b_spec.value)
+        def shard_count(pg: pd.DataFrame, sp) -> pd.DataFrame:
+            ids = wand_mod.match_docs(pg, sp)
             return pd.DataFrame({"n_matches": [int(ids.size)]})
 
-        local = self._postings_for(spec).groupBy("shard").applyInPandas(
-            shard_count, schema=out_schema
-        )
+        local = self._scatter(spec, shard_count, out_schema)
         return local.agg(
             F.coalesce(F.sum("n_matches"), F.lit(0)).alias("n_matches")
         )

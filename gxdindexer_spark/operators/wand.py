@@ -90,6 +90,11 @@ def _topk_from_scores(
     return doc_ids[order], scores[order]
 
 
+def hits_frame(doc_ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    """(doc_id, score) rows, the frame a top-k shard worker emits."""
+    return pd.DataFrame({"doc_id": doc_ids, "score": scores})
+
+
 def match_scores(
     postings: pd.DataFrame,
     spec: QuerySpec,
@@ -365,6 +370,35 @@ def best_window_shard(
                 best = (n, int(merged[lo]), int(merged[hi]))
         out.append((doc, best[1], best[2], best[0]))
     return out
+
+
+def prefers_wand(spec: QuerySpec, present: set | None = None) -> bool:
+    """The TAAT/WAND policy, from driver-side weights alone (field-boosted
+    idfs, the upper-bound proxy): prune iff the heaviest term weight
+    outweighs the sum of the rest — then low-weight lists can land
+    non-essential once theta locks in. A long tail of near-equal
+    weights leaves every list essential, and a single list has nothing
+    to skip; both run TAAT. ``present`` restricts the test to the
+    (field, term_id) keys one shard holds postings for
+    (``present_terms``). Rank-identical either way: a latency rule."""
+    ws = sorted(
+        (
+            w
+            for kk, w in spec.term_weights.items()
+            if present is None or kk in present
+        ),
+        reverse=True,
+    )
+    return len(ws) > 1 and ws[0] > sum(ws[1:])
+
+
+def present_terms(postings: pd.DataFrame) -> set:
+    """(field, term_id) keys with postings rows in ``postings``."""
+    return set(
+        postings[["field", "term_id"]]
+        .drop_duplicates()
+        .itertuples(index=False, name=None)
+    )
 
 
 def match_docs(postings: pd.DataFrame, spec: QuerySpec) -> np.ndarray:

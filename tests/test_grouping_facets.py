@@ -526,36 +526,89 @@ def test_export_matches_full_sorted(built, spark):
     assert len(flt) < len(want)
     with pytest.raises(ValueError, match="not in the doc store"):
         eng.export_matches(q, by="nope")
+    # a sort key that is also doc_id, or also a requested column,
+    # appears once in the output
+    by_id = eng.export_matches(q, by="doc_id")
+    assert by_id.columns == ["doc_id"]
+    assert [r["doc_id"] for r in by_id.collect()] == sorted(
+        sub["doc_id"].astype(int)
+    )
+    by_path = eng.export_matches(q, by="path", columns=("path",))
+    assert by_path.columns == ["doc_id", "path"]
+    assert [(r["doc_id"], r["path"]) for r in by_path.collect()] == [
+        (int(r.doc_id), r.path)
+        for r in sub.sort_values(["path", "doc_id"]).itertuples()
+    ]
 
 
 def test_grouped_and_facet_plans_scan_postings_only(built, spark):
-    """Plan shape: like facet_counts_stored, the grouped/range/pivot
-    paths read ONLY the postings through Spark — the doc store is a
+    """Plan shape of every shard scatter-gather: ONE Spark file scan
+    (the postings) and ONE FlatMapGroupsInPandas — the doc store is a
     direct per-shard pyarrow read inside the worker, never a Spark
-    scan or exchange."""
+    scan or exchange. '+if -if' ('if' is in every shard) runs every
+    shard worker and matches nothing: each method then returns an
+    empty result (count 0) with the same column names and types as a
+    matching query."""
     import contextlib
     import io
     import re
 
     idx, _pdocs = built
     eng = IndexQueryEngine(spark, idx)
-    for df in (
-        eng.grouped_topk("merge* if", by="lang", k_groups=3),
-        eng.facet_ranges_stored(
-            "merge* if", by="n_chars", start=0, end=400, gap=50
+    calls = {
+        "grouped_topk": lambda q: eng.grouped_topk(q, by="lang", k_groups=3),
+        "facet_ranges_stored": lambda q: eng.facet_ranges_stored(
+            q, by="n_chars", start=0, end=4000, gap=500
         ),
-        eng.facet_pivot_stored("merge* if", by_a="lang", by_b="repo"),
-    ):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        # formatted explain emits one "(n) Scan parquet" detail header
-        # per scan node (the tree line "Scan parquet  (n)" would
-        # double-count against it)
-        scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
-        assert len(scans) == 1, plan
-        locations = [
-            ln for ln in plan.splitlines() if "Location" in ln
-        ]
-        assert locations and all("postings" in ln for ln in locations), plan
+        "facet_pivot_stored": lambda q: eng.facet_pivot_stored(
+            q, by_a="lang", by_b="repo"
+        ),
+        "topk_wand": lambda q: eng.topk(q, k=5, mode="wand"),
+        "topk_auto": lambda q: eng.topk(q, k=5, mode="auto"),
+        "topk_where": lambda q: eng.topk(q, k=5, where="n_chars < 2400"),
+        "topk_boosted": lambda q: eng.topk_boosted(q, k=5, field="opt_val"),
+        "sorted_matches": lambda q: eng.sorted_matches(
+            q, by="path", k=5, columns=("lang",)
+        ),
+        "export_matches": lambda q: eng.export_matches(
+            q, by="n_chars", columns=("lang",)
+        ),
+        "facet_counts_stored": lambda q: eng.facet_counts_stored(q, by="lang"),
+        "facet_stats_stored": lambda q: eng.facet_stats_stored(
+            q, on="opt_val", by="lang"
+        ),
+        "count_matches": lambda q: eng.count_matches(q),
+        "matching_docs": lambda q: eng.matching_docs(q),
+    }
+    # both clauses resolve to real postings, so the workers do run
+    assert eng.make_spec("+if -if").term_weights
+    for name, call in calls.items():
+        shapes = {}
+        for q in ("merge* if", "+if -if"):
+            df = call(q)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            plan = buf.getvalue()
+            # formatted explain emits one "(n) Node" detail header per
+            # node (the tree line "Node (n)" would double-count)
+            scans = re.findall(r"^\(\d+\) Scan parquet", plan, re.M)
+            assert len(scans) == 1, (name, plan)
+            udfs = re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M)
+            assert len(udfs) == 1, (name, plan)
+            locations = [
+                ln for ln in plan.splitlines() if "Location" in ln
+            ]
+            assert locations and all(
+                "postings" in ln for ln in locations
+            ), (name, plan)
+            rows = df.collect()
+            shapes[q] = [(f.name, f.dataType) for f in df.schema.fields]
+            if q == "+if -if":
+                if name == "count_matches":
+                    assert [r["n_matches"] for r in rows] == [0], name
+                else:
+                    assert rows == [], (name, rows)
+            else:
+                assert rows, name
+        assert shapes["+if -if"] == shapes["merge* if"], (name, shapes)

@@ -295,6 +295,13 @@ def test_wildcard_expansion_and_count(built, spark):
         1 for ts in toks.values() if any(t.startswith("merge") for t in ts)
     )
     assert n == expect
+    # a query with no dictionary term counts 0 from a JVM-side row —
+    # no Python RDD (and its per-partition workers) behind it
+    none = eng.count_matches("zzzznotaterm")
+    assert [r["n_matches"] for r in none.collect()] == [0]
+    assert none.schema == eng.count_matches("merge*").schema
+    plan = none._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
     # wildcard top-k scores only docs with matching terms
     hits = eng.topk("merge*", k=5, fields=["content"]).collect()
     assert hits and all(
@@ -933,6 +940,17 @@ def test_sorted_matches_pages_by_stored_field(built, spark):
     got = eng.sorted_matches(q, by="path", k=3, columns=("lang",)).collect()
     lang_of = dict(zip(pdocs["doc_id"], pdocs["lang"]))
     assert all(r["lang"] == lang_of[r["doc_id"]] for r in got)
+    # a sort key that is also doc_id, or also a requested column,
+    # appears once in the output
+    oracle_ids = sorted(d for d, _s in _oracle_topk(pdocs, q, len(pdocs)))
+    by_id = eng.sorted_matches(q, by="doc_id", k=6, offset=2)
+    assert by_id.columns == ["doc_id"]
+    assert [r["doc_id"] for r in by_id.collect()] == oracle_ids[2:8]
+    by_path = eng.sorted_matches(q, by="path", k=6, columns=("path",))
+    assert by_path.columns == ["doc_id", "path"]
+    assert [(r["path"], r["doc_id"]) for r in by_path.collect()] == (
+        expect_all[:6]
+    )
     with pytest.raises(ValueError, match="not in the doc store"):
         eng.sorted_matches(q, by="no_such_col")
     # cursor paging (search_after): walking pages by cursor visits the
