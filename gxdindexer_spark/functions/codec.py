@@ -3,9 +3,14 @@ skip pointers and block-max metadata.
 
 This is the from-scratch artifact the reference delegates to Lucene
 (the reference repo ships documents to Solr and never touches postings;
-see /root/reference README.md:2). Everything here is pure numpy so it
-can run inside Arrow-batched ``applyInPandas`` workers with no per-row
-Python (BASELINE.json input_hint).
+see the reference README.md:2). Everything here is pure numpy so it
+runs inside Arrow-batched workers with no per-row Python
+(BASELINE.json input_hint). The build encodes a whole sorted Arrow
+batch of postings with ONE :func:`encode_groups` call: group and block
+starts, gaps, block-max metadata and each varbyte stream are computed
+for every term of the batch at once, and the per-term byte offsets
+come from one cumulative sum of encoded lengths.
+:func:`encode_postings` is the same encoder called on one term.
 
 Layout per (field, term, shard):
 
@@ -38,37 +43,28 @@ BLOCK_SIZE = 128
 
 
 def varbyte_encode(values: np.ndarray) -> bytes:
-    """Vectorized varbyte encode of a uint64 array -> bytes.
+    """Vectorized varbyte encode of a uint64 array -> bytes (no loop
+    over values)."""
+    return _varbyte(values)[0].tobytes()
 
-    Loops over byte *positions* (<= 10), never over values.
+
+def _varbyte(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """-> (encoded uint8 buffer, byte offset of each value's encoding,
+    len = values + 1).
+
+    Builds the (values x max-bytes) table of 7-bit groups and keeps
+    each row's leading ``nbytes`` groups, row-major.
     """
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # number of 7-bit groups per value: max(1, ceil(bitlen/7))
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    # bit length via successive shifts (at most 10 iterations for 64-bit)
-    nbytes = np.ones(v.shape, dtype=np.int64)
-    tmp >>= np.uint64(7)
-    while tmp.any():
-        nbytes += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    del nbits
-    ends = np.cumsum(nbytes)
-    total = int(ends[-1])
-    out = np.empty(total, dtype=np.uint8)
-    starts = ends - nbytes
-    maxb = int(nbytes.max())
-    for pos in range(maxb):
-        mask = nbytes > pos
-        idx = starts[mask] + pos
-        chunk = (v[mask] >> np.uint64(7 * pos)) & np.uint64(0x7F)
-        is_last = (nbytes[mask] - 1) == pos
-        out[idx] = chunk.astype(np.uint8) | np.where(is_last, 0, 0x80).astype(
-            np.uint8
-        )
-    return out.tobytes()
+    nbytes = _varbyte_lengths(v)
+    ends = np.zeros(v.size + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=ends[1:])
+    width = np.arange(int(nbytes.max()) if v.size else 0)
+    groups = (
+        (v[:, None] >> (7 * width).astype(np.uint64)) & np.uint64(0x7F)
+    ).astype(np.uint8)
+    groups[width < nbytes[:, None] - 1] |= np.uint8(0x80)
+    return groups[width < nbytes[:, None]], ends
 
 
 def varbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
@@ -263,6 +259,145 @@ class PostingList:
         return docs, tfs, dls
 
 
+def group_starts(*keys: np.ndarray) -> np.ndarray:
+    """Row offsets of the runs of equal keys in key-sorted columns
+    (len = groups + 1; the last entry is the row count)."""
+    n = len(keys[0])
+    change = np.zeros(n, dtype=bool)
+    change[:1] = True
+    for k in keys:
+        change[1:] |= k[1:] != k[:-1]
+    return np.append(np.flatnonzero(change), n)
+
+
+def encode_groups(
+    starts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    tf_norms: np.ndarray,
+    dls: np.ndarray | None = None,
+    block_size: int = BLOCK_SIZE,
+    positions: tuple[np.ndarray, np.ndarray] | None = None,
+) -> dict:
+    """Encode every group of a batch of postings at once.
+
+    Rows ``starts[g]:starts[g+1]`` are group ``g`` (one term's
+    docID-sorted postings); rows past ``starts[-1]`` are ignored.
+    ``positions`` is ``(counts, flat)``: per-posting position counts
+    and all postings' ascending positions concatenated.
+
+    Returns the postings-table columns for the G groups: ``df`` and
+    ``cf`` as int64 arrays of len G; every list and binary column as
+    ``(values, offsets)`` with group ``g``'s entry at
+    ``values[offsets[g]:offsets[g+1]]`` (binary values are uint8).
+    Each stream is varbyte-encoded once for the whole batch; the
+    per-group and per-block byte offsets come from the cumulative
+    encoded lengths.
+    """
+    starts = np.asarray(starts, dtype=np.int64)
+    n = int(starts[-1])
+    doc_ids = np.ascontiguousarray(doc_ids[:n], dtype=np.int64)
+    tfs = np.ascontiguousarray(tfs[:n], dtype=np.uint64)
+    dls = (
+        np.zeros(n, dtype=np.uint64)
+        if dls is None
+        else np.ascontiguousarray(dls[:n], dtype=np.uint64)
+    )
+    tfn = np.asarray(tf_norms[:n], dtype=np.float64)
+    g_n = starts.size - 1
+    df = np.diff(starts)
+    step = np.diff(doc_ids)
+    inner = np.ones(step.size, dtype=bool)
+    cuts = starts[1:-1]
+    inner[cuts[(cuts > 0) & (cuts < n)] - 1] = False
+    if (step[inner] <= 0).any():
+        raise ValueError("doc ids must be strictly ascending")
+    # blocks: group g holds ceil(df/block_size) of them, the first at
+    # its first row
+    per_group = (df + block_size - 1) // block_size
+    blocks = np.zeros(g_n + 1, dtype=np.int64)
+    np.cumsum(per_group, out=blocks[1:])
+    b_group = np.repeat(np.arange(g_n), per_group)
+    b_start = starts[b_group] + (
+        np.arange(blocks[-1]) - blocks[b_group]
+    ) * block_size
+    b_end = np.minimum(b_start + block_size, starts[b_group + 1])
+    # gaps with an absolute first value per block (blocks decode
+    # standalone); the group-boundary steps are all overwritten here
+    gaps = np.empty(n, dtype=np.uint64)
+    gaps[1:] = step.astype(np.uint64)
+    gaps[b_start] = doc_ids[b_start].astype(np.uint64)
+    # block-max tf-norm, rounded UP to float32: the stored bound must
+    # never fall below the float64 tf-norm recomputed at query time,
+    # or block-max pruning would drop true top-k docs.
+    m64 = (
+        np.maximum.reduceat(tfn, b_start) if b_start.size else np.empty(0)
+    )
+    m32 = m64.astype(np.float32)
+    bump = m32.astype(np.float64) < m64
+    m32[bump] = np.nextafter(m32[bump], np.float32(np.inf))
+    ctf = np.zeros(n + 1, dtype=np.uint64)
+    np.cumsum(tfs, out=ctf[1:])
+    # each *_offsets list holds its group's block offsets plus the
+    # group's total byte length
+    lists = blocks + np.arange(g_n + 1)
+    at_block = np.arange(b_start.size) + b_group
+    at_end = lists[1:] - 1
+
+    def stream(values: np.ndarray, row_value: np.ndarray) -> tuple:
+        """varbyte ``values`` once -> (per-block byte offsets column,
+        buffer column); ``row_value[i]`` is the index of row i's first
+        value (len = rows + 1)."""
+        buf, ends = _varbyte(values)
+        base = ends[row_value[starts]]
+        rel = np.empty(at_block.size + g_n, dtype=np.int64)
+        rel[at_block] = ends[row_value[b_start]] - base[b_group]
+        rel[at_end] = base[1:] - base[:-1]
+        return (rel, lists), (buf, base)
+
+    rows = np.arange(n + 1)
+    doc_offsets, docs_buf = stream(gaps, rows)
+    tf_offsets, tfs_buf = stream(tfs, rows)
+    dl_offsets, dls_buf = stream(dls, rows)
+    if positions is None:
+        pos_offsets = (np.zeros(at_block.size + g_n, np.int64), lists)
+        pos_buf = (np.empty(0, np.uint8), np.zeros(g_n + 1, np.int64))
+    else:
+        # per posting [npos, first, deltas...]
+        counts = np.asarray(positions[0][:n], dtype=np.int64)
+        row_value = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(counts + 1, out=row_value[1:])
+        heads = row_value[:-1]
+        flat = np.asarray(positions[1], dtype=np.int64)[: row_value[-1] - n]
+        deltas = flat.copy()
+        if flat.size:
+            deltas[1:] = np.diff(flat)
+            first = (heads - np.arange(n))[counts > 0]
+            deltas[first] = flat[first]
+        vals = np.empty(int(row_value[-1]), dtype=np.uint64)
+        vals[heads] = counts.astype(np.uint64)
+        body = np.ones(vals.size, dtype=bool)
+        body[heads] = False
+        vals[body] = deltas.astype(np.uint64)
+        pos_offsets, pos_buf = stream(vals, row_value)
+    return {
+        "df": df,
+        "cf": (ctf[starts[1:]] - ctf[starts[:-1]]).astype(np.int64),
+        "block_first": (doc_ids[b_start], blocks),
+        "block_last": (doc_ids[b_end - 1], blocks),
+        "block_max_tfn": (m32, blocks),
+        "block_count": ((b_end - b_start).astype(np.int32), blocks),
+        "doc_offsets": doc_offsets,
+        "tf_offsets": tf_offsets,
+        "dl_offsets": dl_offsets,
+        "docs_buf": docs_buf,
+        "tfs_buf": tfs_buf,
+        "dls_buf": dls_buf,
+        "pos_offsets": pos_offsets,
+        "pos_buf": pos_buf,
+    }
+
+
 def encode_postings(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -279,116 +414,39 @@ def encode_postings(
     length) IS stored — the Lucene-norms analog.
 
     Returns a dict of plain-python/bytes values matching the postings
-    table schema (arrays as lists for Arrow friendliness).
+    table schema (arrays as lists for Arrow friendliness). A one-group
+    call of :func:`encode_groups`.
     """
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    tfs = np.ascontiguousarray(tfs, dtype=np.uint64)
-    if dls is None:
-        dls = np.zeros(doc_ids.size, dtype=np.uint64)
-    dls = np.ascontiguousarray(dls, dtype=np.uint64)
-    n = doc_ids.size
-    if n == 0:
-        return {
-            "df": 0, "cf": 0, "block_first": [], "block_last": [],
-            "block_max_tfn": [], "block_count": [], "doc_offsets": [0],
-            "tf_offsets": [0], "dl_offsets": [0], "docs_buf": b"",
-            "tfs_buf": b"", "dls_buf": b"", "pos_offsets": [0],
-            "pos_buf": b"",
-        }
-    nblocks = (n + block_size - 1) // block_size
-    starts = np.arange(nblocks, dtype=np.int64) * block_size
-    ends = np.minimum(starts + block_size, n)
-    if (np.diff(doc_ids) <= 0).any():
-        raise ValueError("doc ids must be strictly ascending")
-    # gaps with per-block absolute first value (blocks decode standalone)
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = np.uint64(doc_ids[0])
-    gaps[1:] = np.diff(doc_ids).astype(np.uint64)
-    gaps[starts] = doc_ids[starts].astype(np.uint64)
-    # one vectorized varbyte pass per buffer; block byte offsets come
-    # from the per-value byte lengths (no per-block Python loop).
-    doc_off = _block_offsets(gaps, starts)
-    tf_off = _block_offsets(tfs, starts)
-    dl_off = _block_offsets(dls, starts)
-    # block-max tf-norm, rounded UP to float32: the stored bound must
-    # never fall below the float64 tf-norm recomputed at query time,
-    # or block-max pruning would drop true top-k docs.
-    tfn = np.asarray(tf_norms, dtype=np.float64)
-    m64 = np.maximum.reduceat(tfn, starts)
-    m32 = m64.astype(np.float32)
-    bump = m32.astype(np.float64) < m64
-    m32[bump] = np.nextafter(m32[bump], np.float32(np.inf))
-    # optional positions payload: per posting [npos, first, deltas...]
-    pos_off = [0] * (nblocks + 1)
-    pos_buf = b""
+    n = len(doc_ids)
+    pos = None
     if positions is not None:
-        counts = np.fromiter(
-            (len(p) for p in positions), dtype=np.int64, count=n
-        )
+        counts = np.fromiter((len(p) for p in positions), np.int64, count=n)
         flat = (
             np.concatenate([np.asarray(p, dtype=np.int64) for p in positions])
             if counts.sum()
             else np.empty(0, np.int64)
         )
-        # delta within each posting (first absolute)
-        pstarts = np.zeros(n, dtype=np.int64)
-        np.cumsum(counts[:-1], out=pstarts[1:])
-        deltas = flat.copy()
-        if flat.size:
-            deltas[1:] = np.diff(flat)
-            nz = pstarts[counts > 0]
-            deltas[nz] = flat[nz]
-        # interleave [count, deltas...] per posting
-        vstarts = pstarts + np.arange(n)  # +1 slot per preceding posting
-        big = np.zeros(n + int(counts.sum()), dtype=np.uint64)
-        big[vstarts] = counts.astype(np.uint64)
-        mask = np.ones(big.size, dtype=bool)
-        mask[vstarts] = False
-        big[mask] = deltas.astype(np.uint64)
-        # per-block offsets: values per block via reduceat over (1+count)
-        per_posting = counts + 1
-        vals_per_block = np.add.reduceat(per_posting, starts)
-        vcum = np.zeros(nblocks + 1, dtype=np.int64)
-        np.cumsum(vals_per_block, out=vcum[1:])
-        byte_cum = np.zeros(big.size + 1, dtype=np.int64)
-        np.cumsum(_varbyte_lengths(big), out=byte_cum[1:])
-        pos_off = byte_cum[vcum].tolist()
-        pos_buf = varbyte_encode(big)
-    return {
-        "df": n,
-        "cf": int(tfs.sum()),
-        "block_first": doc_ids[starts].tolist(),
-        "block_last": doc_ids[ends - 1].tolist(),
-        "block_max_tfn": m32.tolist(),
-        "block_count": (ends - starts).astype(np.int32).tolist(),
-        "doc_offsets": doc_off.tolist(),
-        "tf_offsets": tf_off.tolist(),
-        "dl_offsets": dl_off.tolist(),
-        "docs_buf": varbyte_encode(gaps),
-        "tfs_buf": varbyte_encode(tfs),
-        "dls_buf": varbyte_encode(dls),
-        "pos_offsets": pos_off,
-        "pos_buf": pos_buf,
-    }
+        pos = (counts, flat)
+    enc = encode_groups(
+        np.array([0, n]), doc_ids, tfs, tf_norms, dls, block_size, pos
+    )
+    row = {}
+    for name, col in enc.items():
+        if not isinstance(col, tuple):
+            row[name] = int(col[0])
+            continue
+        values, offsets = col
+        one = values[offsets[0] : offsets[1]]
+        row[name] = one.tobytes() if name.endswith("_buf") else one.tolist()
+    return row
+
+
+_VARBYTE_STEPS = np.uint64(1) << (7 * np.arange(1, 10, dtype=np.uint64))
 
 
 def _varbyte_lengths(values: np.ndarray) -> np.ndarray:
     """bytes each value will occupy when varbyte-encoded."""
-    nbytes = np.ones(values.shape, dtype=np.int64)
-    tmp = values.copy()
-    tmp >>= np.uint64(7)
-    while tmp.any():
-        nbytes += (tmp > 0).astype(np.int64)
-        tmp >>= np.uint64(7)
-    return nbytes
-
-
-def _block_offsets(values: np.ndarray, block_starts: np.ndarray) -> np.ndarray:
-    """byte offsets of each block boundary in the encoded buffer
-    (len = nblocks + 1)."""
-    csum = np.zeros(values.size + 1, dtype=np.int64)
-    np.cumsum(_varbyte_lengths(values), out=csum[1:])
-    return np.concatenate([csum[block_starts], csum[-1:]])
+    return np.searchsorted(_VARBYTE_STEPS, values, side="right") + 1
 
 
 def posting_list_from_row(term: str, row: dict) -> PostingList:

@@ -6,7 +6,9 @@ Pipeline shape (all Arrow-batched, no per-row Python):
     -> mapInPandas tokenize+tf            (TERM_FREQS rows, term + term_id)
     -> [strings branch off to the small dict_parts agg here]
     -> numeric-only repartition(shard) + sort(field, term_id, doc_id)
-    -> mapInPandas group-aware stream encode   (FINAL posting rows)
+    -> mapInArrow encode: one ``codec.encode_groups`` call per Arrow
+       batch, every (shard, field, term_id) group of the batch at once
+       (FINAL posting rows; no Python loop over groups)
     -> write parquet partitioned by shard
 
 Skew handling (north_rule, SURVEY.md §4.1): stopword-like terms get
@@ -40,13 +42,15 @@ from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from gxdindexer_spark import schemas
-from gxdindexer_spark.functions import analyze, bm25, hashing
-from gxdindexer_spark.functions.codec import encode_postings
+from gxdindexer_spark.functions import analyze, bm25, codec, hashing
 
 DEFAULT_FIELDS = {"content": "code", "path": "path", "lang": "lang"}
 
@@ -107,33 +111,31 @@ def term_freqs_df(
     return docs.select(*cols).mapInPandas(tok, schema=schema)
 
 
-def _stream_groups(
-    batches: Iterator[pd.DataFrame],
-    keys: list[str],
-    emit,
-) -> Iterator[pd.DataFrame]:
-    """Group-aware Arrow-batch streaming: rows arrive sorted by ``keys``;
-    the (possibly split) trailing group of each batch is carried into
-    the next so ``emit`` always sees whole groups, and memory stays
-    bounded by group size, not partition size."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        last_key = tuple(pdf.iloc[-1][keys])
-        tail_mask = pd.Series(True, index=pdf.index)
-        for kcol, kval in zip(keys, last_key):
-            tail_mask &= pdf[kcol] == kval
-        # rows of the last group are contiguous at the end
-        n_tail = int(tail_mask[::-1].cummin()[::-1].sum())
-        head = pdf.iloc[: len(pdf) - n_tail]
-        carry = pdf.iloc[len(pdf) - n_tail :]
-        if len(head):
-            yield emit(head)
-    if carry is not None and len(carry):
-        yield emit(carry)
+_POSTINGS_ARROW = to_arrow_schema(schemas.POSTINGS)
+
+
+def _postings_batch(columns: dict) -> pa.RecordBatch:
+    """Key columns + ``codec.encode_groups`` output -> one POSTINGS
+    batch; every list and binary column wraps the encoder's values and
+    offsets without a per-row copy."""
+    n = len(columns["df"])
+    arrays = []
+    for f in _POSTINGS_ARROW:
+        col = columns[f.name]
+        if isinstance(col, tuple):
+            values, offsets = col
+            offsets = offsets.astype(np.int32)
+            if pa.types.is_binary(f.type):
+                col = pa.BinaryArray.from_buffers(
+                    f.type, n,
+                    [None, pa.py_buffer(offsets), pa.py_buffer(values)],
+                )
+            else:
+                col = pa.ListArray.from_arrays(
+                    pa.array(offsets), pa.array(values), type=f.type
+                )
+        arrays.append(col)
+    return pa.RecordBatch.from_arrays(arrays, schema=_POSTINGS_ARROW)
 
 
 class IndexBuilder:
@@ -247,23 +249,22 @@ class IndexBuilder:
         partitioned write needs, so the write still emits one file per
         shard dir — with an in-partition sort by (field, term_id,
         doc_id). Every (shard, field, term_id) group is then
-        contiguous inside one task and the group-aware stream encodes
-        each term's FINAL posting row directly. The salted two-phase
-        this replaces (partial encode keyed on a docID-range salt,
-        then a second shuffle + Python pass to ``merge_salted`` the
-        partials) paid a full extra shuffle of the raw tf bytes plus a
-        payload shuffle to reassemble groups this plan never splits:
-        a shard's docID range is bounded by ``docs_per_shard``, so the
-        heaviest term's encode group is bounded exactly like one
-        term's salted partials were (guide §2.4: operations keyed the
-        same way share one exchange). Rows stay sorted by
-        (field, term_id) in-file, so row-group min/max stats keep
-        pruning term IN-list scans. Per-phase-out equivalence:
-        decoded postings are identical (test_codec asserts
-        merge-of-salted == unsalted encode content); only block
-        boundaries near old salt edges differ, which WAND's
-        block-max pruning treats as metadata (rank-identical,
-        property-tested WAND == TAAT).
+        contiguous inside one task, and one ``mapInArrow`` pass
+        encodes each Arrow batch with ONE ``codec.encode_groups`` call
+        (no Python loop over the batch's groups) into one POSTINGS
+        batch whose list and binary columns are built straight from
+        the encoder's offset arrays. The trailing group of a batch may
+        continue in the next one, so it is carried over as a table
+        slice and encoded with the next batch; memory stays bounded by
+        batch plus group size, not partition size.
+
+        A shard's docID range is bounded by ``docs_per_shard``, so the
+        heaviest term's encode group is bounded too (the job the
+        earlier salted two-phase encode did with a docID-range salt, a
+        second shuffle and a ``merge_salted`` pass; guide §2.4:
+        operations keyed the same way share one exchange). Rows stay
+        sorted by (field, term_id) in-file, so row-group min/max stats
+        keep pruning term IN-list scans.
         """
         spark = tf.sparkSession
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -272,63 +273,71 @@ class IndexBuilder:
         with_pos = self.with_positions
         # drop the term STRING before the shuffle: only numeric
         # columns (plus the tiny field tag) cross the Arrow boundary.
-        cols = [
-            F.col("shard"),
-            F.col("field"),
-            F.col("term_id"),
-            F.col("doc_id"),
-            F.col("tf"),
-            F.col("dl"),
-        ]
-        if self.with_positions:
-            cols.append(F.col("positions"))
-        keys = ["shard", "field", "term_id"]
+        cols = ["shard", "field", "term_id", "doc_id", "tf", "dl"]
+        if with_pos:
+            cols.append("positions")
         arranged = (
             tf.select(*cols)
             .repartition(n_parts, "shard")
-            .sortWithinPartitions(*keys, "doc_id")
+            .sortWithinPartitions("shard", "field", "term_id", "doc_id")
         )
 
-        def encode_stream(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            """Group-aware streaming encoder: pandas-groupby within each
-            Arrow batch, carrying the (possibly split) last group over
-            to the next batch so memory stays bounded by group size,
-            not partition size."""
+        def encode(t: pa.Table, hold_last: bool) -> tuple:
+            """-> (POSTINGS batch of t's groups, rows not encoded);
+            ``hold_last`` keeps the last group back, since the next
+            batch may continue it."""
+            t = t.combine_chunks()
+            field = pc.dictionary_encode(t.column("field").chunk(0))
+            codes = field.indices.to_numpy()
+            shard = t.column("shard").to_numpy()
+            term_id = t.column("term_id").to_numpy()
+            starts = codec.group_starts(shard, codes, term_id)
+            if hold_last:
+                starts = starts[:-1]
+            tfs = t.column("tf").to_numpy()
+            dls = t.column("dl").to_numpy()
             avg = b_avgdl.value
-            use_pos = with_pos
+            field_avg = np.array(
+                [avg[f] for f in field.dictionary.to_pylist()]
+            )
+            tfn = bm25.tf_norm(
+                tfs, dls.astype(np.float64), field_avg[codes], k1, b_
+            )
+            pos = None
+            if with_pos:
+                p = t.column("positions").chunk(0)
+                counts = pc.list_value_length(p).to_numpy()
+                pos = (counts, p.flatten().to_numpy())
+            enc = codec.encode_groups(
+                starts, t.column("doc_id").to_numpy(), tfs, tfn, dls, bs,
+                pos,
+            )
+            heads = starts[:-1]
+            batch = _postings_batch({
+                **enc,
+                "shard": pa.array(shard[heads]),
+                "field": field.dictionary.take(pa.array(codes[heads])),
+                "term_id": pa.array(term_id[heads]),
+            })
+            return batch, t.slice(int(starts[-1]))
 
-            def emit(chunk: pd.DataFrame) -> pd.DataFrame:
-                rows = []
-                for (sh, fl, tid), g in chunk.groupby(keys, sort=False):
-                    tfs = g["tf"].to_numpy(np.uint64)
-                    dls = g["dl"].to_numpy(np.uint64)
-                    tfn = bm25.tf_norm(
-                        tfs, dls.astype(np.float64), avg[fl], k1, b_
-                    )
-                    pos = (
-                        [np.asarray(p, dtype=np.int64) for p in g["positions"]]
-                        if use_pos
-                        else None
-                    )
-                    row = encode_postings(
-                        g["doc_id"].to_numpy(np.int64),
-                        tfs,
-                        tfn,
-                        bs,
-                        dls=dls,
-                        positions=pos,
-                    )
-                    rows.append(
-                        {"shard": sh, "field": fl, "term_id": tid, **row}
-                    )
-                out = pd.DataFrame(rows)
-                return out[[f.name for f in schemas.POSTINGS.fields]]
+        def encode_stream(
+            batches: Iterator[pa.RecordBatch],
+        ) -> Iterator[pa.RecordBatch]:
+            carry = None
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                t = pa.Table.from_batches([batch])
+                if carry is not None:
+                    t = pa.concat_tables([carry, t])
+                out, carry = encode(t, hold_last=True)
+                if out.num_rows:
+                    yield out
+            if carry is not None:
+                yield encode(carry, hold_last=False)[0]
 
-            yield from _stream_groups(batches, keys, emit)
-
-        return arranged.mapInPandas(encode_stream, schema=schemas.POSTINGS)
+        return arranged.mapInArrow(encode_stream, schema=schemas.POSTINGS)
 
     # ------------------------------------------------- full build + write
 
@@ -671,6 +680,9 @@ class IndexBuilder:
                             fut.result()
                         except Exception:
                             pass
+                # nor leave the pool's threads and the tf cache behind
+                bg_pool.shutdown()
+                tf.unpersist()
                 raise
             mark("postings")
             # per-shard metrics only need postings (written above) and

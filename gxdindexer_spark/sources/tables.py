@@ -11,12 +11,8 @@ drives scatter-gather query and resumable builds).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 TPCH_TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -53,17 +49,21 @@ def prepare_docs(
 
     doc_id is a dense 0..N-1 id over the natural key ordering
     (repo, path, commit): stable and reproducible across runs and
-    parallelism levels (unlike ``monotonically_increasing_id``).
+    parallelism levels (``monotonically_increasing_id`` alone is
+    neither; here it only gives a row's position in its pinned
+    partition).
 
     Implementation is the scalable two-pass offset technique, NOT a
     global ``row_number()`` window (which funnels 10^12 rows through
     one reducer): range-repartition + sort within partitions on the
     natural key, count rows per partition (a tiny P-row aggregate),
-    broadcast the cumulative offsets, then assign
-    ``offset[pid] + position`` inside an Arrow-batched ``mapInPandas``.
-    Analogous cost class to the reference's precomputed sort-rank
-    tables (GxdResultIndexer.java:869-883) — at 10^12 rows the docs
-    table is persisted once and reused per build.
+    then assign ``offset[pid] + position`` with built-in expressions
+    only: ``monotonically_increasing_id()`` is ``(pid << 33) +
+    position``, so no Python worker touches the rows and every
+    consumer of the docs frame (fingerprint, doc store, tokenizer)
+    re-runs only JVM code. Analogous cost class to the reference's
+    precomputed sort-rank tables (GxdResultIndexer.java:869-883) — at
+    10^12 rows the docs table is persisted once and reused per build.
 
     shard = doc_id // docs_per_shard: contiguous docID ranges so every
     posting list within a shard stays delta-friendly and the query
@@ -89,38 +89,23 @@ def prepare_docs(
         r["_pid"]: r["cnt"]
         for r in ordered.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     }
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    b_offsets = spark.sparkContext.broadcast(offsets)
-
-    out_schema = T.StructType(
-        list(corpus.schema.fields)
-        + [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("content_sha256", T.StringType(), False),
-            T.StructField("shard", T.IntegerType(), False),
-        ]
+    offsets, acc = [0], 0
+    for p in range(max(counts, default=0)):
+        acc += counts.get(p, 0)
+        offsets.append(acc)
+    pid = F.col("_pid")
+    # monotonically_increasing_id() = (pid << 33) + position in the
+    # partition. Spark types the array lookup and the division as
+    # nullable; the coalesces keep doc_id and shard NOT NULL, as in
+    # the schema (every _pid indexes the array).
+    offset = F.array(*[F.lit(o).cast("long") for o in offsets])[pid]
+    doc_id = F.coalesce(offset, F.lit(0)) + (
+        F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
     )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pos = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            base = b_offsets.value[int(pdf["_pid"].iloc[0])]
-            ids = base + pos + pd.RangeIndex(len(pdf)).to_numpy()
-            pos += len(pdf)
-            pdf = pdf.drop(columns=["_pid"])
-            pdf["doc_id"] = ids
-            pdf["content_sha256"] = ""  # filled natively below (F.sha2)
-            pdf["shard"] = (ids // docs_per_shard).astype("int32")
-            yield pdf
-
-    docs = ordered.mapInPandas(assign, schema=out_schema)
-    # sha256 stays JVM-side (native F.sha2, no Python round-trip).
-    return docs.withColumn(
-        "content_sha256", F.sha2(F.coalesce("content", F.lit("")), 256)
-    )
+    shard = F.expr(f"doc_id div {int(docs_per_shard)}").cast("int")
+    return ordered.select(
+        *corpus.columns,
+        doc_id.alias("doc_id"),
+        # sha256 stays JVM-side (native F.sha2, no Python round-trip).
+        F.sha2(F.coalesce("content", F.lit("")), 256).alias("content_sha256"),
+    ).withColumn("shard", F.coalesce(shard, F.lit(0)))

@@ -9,7 +9,9 @@ from gxdindexer_spark.functions import bm25
 from gxdindexer_spark.functions.codec import (
     delta_decode,
     delta_encode,
+    encode_groups,
     encode_postings,
+    group_starts,
     merge_salted,
     posting_list_from_row,
     varbyte_decode,
@@ -145,3 +147,63 @@ def test_decode_blocks_matches_per_block(n, seed, data):
     parts = [pl.decode_block(b) for b in subset]
     for i in range(3):
         assert np.array_equal(got[i], np.concatenate([p[i] for p in parts]))
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(st.integers(0, 70), min_size=1, max_size=12),
+    st.integers(1, 40),
+    st.booleans(),
+    st.integers(0, 2**31),
+)
+def test_encode_groups_equals_per_group_encode(sizes, block_size, with_pos, seed):
+    """One batch call == per-group encode_postings on every column, for
+    empty and one-posting groups, any block size, positions on/off."""
+    rng = np.random.default_rng(seed)
+    groups = []
+    for n in sizes:
+        ids = np.sort(rng.choice(20 * n + 5, size=n, replace=False)).astype(np.int64)
+        tfs = rng.integers(1, 300, size=n).astype(np.uint64)
+        dls = rng.integers(1, 2**20, size=n).astype(np.uint64)
+        tfn = bm25.tf_norm(tfs, dls.astype(np.float64), avgdl=float(rng.integers(1, 500)))
+        pos = (
+            [np.sort(rng.choice(10**6, size=int(rng.integers(0, 5)), replace=False))
+             for _ in range(n)]
+            if with_pos
+            else None
+        )
+        groups.append((ids, tfs, tfn, dls, pos))
+    starts = np.concatenate([[0], np.cumsum(sizes)])
+    batch_pos = None
+    if with_pos:
+        per_posting = [p for g in groups for p in g[4]]
+        flat = [np.asarray(p, dtype=np.int64) for p in per_posting]
+        batch_pos = (
+            np.array([len(p) for p in per_posting], dtype=np.int64),
+            np.concatenate(flat) if flat else np.empty(0, np.int64),
+        )
+    cat = [np.concatenate([g[i] for g in groups]) for i in range(4)]
+    enc = encode_groups(starts, cat[0], cat[1], cat[2], cat[3], block_size, batch_pos)
+    for g, (ids, tfs, tfn, dls, pos) in enumerate(groups):
+        want = encode_postings(ids, tfs, tfn, block_size, dls=dls, positions=pos)
+        assert set(enc) == set(want)
+        for name, col in enc.items():
+            if isinstance(col, tuple):
+                values, offsets = col
+                got = values[offsets[g] : offsets[g + 1]]
+                got = got.tobytes() if name.endswith("_buf") else got.tolist()
+            else:
+                got = int(col[g])
+            assert got == want[name], (g, name)
+
+
+def test_group_starts_and_unsorted_group_rejected():
+    keys = np.array([3, 3, 5, 5, 5, 9]), np.array([1, 2, 2, 2, 2, 2])
+    assert group_starts(*keys).tolist() == [0, 1, 2, 5, 6]
+    assert group_starts(np.array([], dtype=np.int64)).tolist() == [0]
+    # descending ids across a group boundary are fine, inside are not
+    ids = np.array([5, 9, 1, 4], dtype=np.int64)
+    ones = np.ones(4)
+    encode_groups(np.array([0, 2, 4]), ids, ones, ones)
+    with pytest.raises(ValueError):
+        encode_groups(np.array([0, 4]), ids, ones, ones)
